@@ -26,15 +26,6 @@ object EvmFunctions {
     udf((s: String) => if (s == null) null.asInstanceOf[java.lang.Long]
       else java.lang.Long.valueOf(Hex.decodeLong(s)))
 
-  /** UInt256-ranged decode → Decimal(38,0) convenience view, built from
-    * the native U256 expressions + an ANSI cast (throws above 38 digits
-    * rather than silently nulling). The canonical full-range form is the
-    * 32-byte binary (`evm_hex_decode_u256_n` / U256.scala, wired into
-    * every pipeline transform — SURVEY.md §7 hard part #1). */
-  def evmHexDecodeBig(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    HexExpressions.u256ToStringN(HexExpressions.evmHexDecodeU256N(c))
-      .cast(org.apache.spark.sql.types.DecimalType(38, 0))
-
   val evmHexEncode: UserDefinedFunction =
     udf((b: Array[Byte]) => if (b == null) null else Hex.encode(b))
 

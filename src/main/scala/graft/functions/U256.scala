@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import graft.evm.Hex
@@ -77,11 +76,6 @@ object U256 {
   val u256Mul: UserDefinedFunction = udf((a: Array[Byte], b: Array[Byte]) =>
     if (a == null || b == null) null
     else fromBigInt((toBigInt(a) * toBigInt(b)) & ((BigInt(1) << 256) - 1)))
-
-  /** Comparisons and min/max/sort need no UDF — native binary semantics
-    * are already numeric on the canonical form. */
-  def gt(a: Column, b: Column): Column = a > b
-  def lt(a: Column, b: Column): Column = a < b
 
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.udf.register("u256_from_string", u256FromString)

@@ -678,11 +678,6 @@ object TextAnalysis {
       else (r, "p", nl(r))
     }
 
-  /** [[publicSuffixRules]] (the curated subset) compiled via
-    * [[suffixRuleRows]]. */
-  def publicSuffixRuleRows: Seq[(String, String, Int)] =
-    suffixRuleRows(publicSuffixRules)
-
   /** Longest host tail any rule key can match — the candidate-tail
     * explosion bound (a data swap that adds deeper rules raises it
     * automatically; the full published file reads 5). */
@@ -697,9 +692,6 @@ object TextAnalysis {
   def suffixRulesValuesSql(rules: Seq[String]): String =
     suffixRuleRows(rules).map { case (k, kind, l) =>
       s"('${sqlQuote(k)}', '$kind', $l)" }.mkString(", ")
-
-  def publicSuffixRulesValuesSql: String =
-    suffixRulesValuesSql(publicSuffixRules)
 
   /** FULL-PSL form of [[urlDomainCapPsl]]: registered domains under
     * the complete published-algorithm semantics — wildcard rules,

@@ -47,12 +47,8 @@ object TextDedup {
     docs.groupBy(md5(col(textCol)).as("text_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Distinct (doc, shingle) pairs — the inverted-index input. */
-  def shingleIndex(docs: DataFrame, idCol: String, textCol: String, k: Int = 3): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-        explode(array_distinct(wordShingles(col(textCol), k))).as("shingle"))
-
-  /** Same index with the shingle replaced by its 64-bit xxhash: the join
+  /** Distinct (doc, shingle) pairs — the inverted-index input — with
+    * each shingle replaced by its 64-bit xxhash: the join
     * and aggregation keys become fixed-width longs instead of strings,
     * which cuts shuffle bytes and comparison cost on the pair-counting
     * path. Collision risk at 64 bits is ~n²/2⁶⁵ (≈1e-10 for 100k distinct

@@ -191,7 +191,7 @@ object PipelineRunner {
                 try {
                   if (failure.get() == null) defn.commit(spark, batch, df)
                 } catch {
-                  case NonFatal(e) =>
+                  case e: Throwable =>
                     failure.compareAndSet(null, e)
                     throw e
                 } finally seq.release(batch.number)
@@ -202,7 +202,11 @@ object PipelineRunner {
               if (seq.awaitTurn(batch.number)) seq.release(batch.number)
             }
           } catch {
-            case NonFatal(e) =>
+            // Throwable, not NonFatal: the pool's FutureTask swallows
+            // whatever escapes here, so an unrecorded LinkageError or
+            // VirtualMachineError would leave later batches waiting on
+            // the gate forever, or a lone batch "succeeding"
+            case e: Throwable =>
               failure.compareAndSet(null, e)
               seq.poison()
           } finally done.countDown()

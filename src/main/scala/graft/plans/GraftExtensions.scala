@@ -35,8 +35,9 @@ object HexRoundtripElimination extends Rule[LogicalPlan] {
     }
 }
 
-/** Session extensions installer: optimizer rule + SQL functions, so an
-  * extensions-configured session needs no imperative `registerAll`. */
+/** Session extensions installer: injects the `HexRoundtripElimination`
+  * optimizer rule only. SQL functions are not registered here; sessions
+  * still call `EvmFunctions`/`HexExpressions.registerAll`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => HexRoundtripElimination)

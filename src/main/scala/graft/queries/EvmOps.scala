@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.EvmFunctions._
-import graft.pipeline.{DerivedPipelines, EthereumPipelines, PipelineRunner, SinkTable}
+import graft.pipeline.{AbiDictionary, PipelineRunner, SinkTable, SqlPipeline}
 import graft.pipeline.PipelineRunner.{Batch, Config}
 import Util._
 
@@ -15,20 +15,45 @@ import Util._
 object EvmOps extends QueryPack {
 
   private val endpoint = "fake://chain?tip=20#fail-on-error=true&fail-on-null=true"
+  /** The chain templates append the `#fail-on-…` fragment themselves. */
+  private val chain = "fake://chain?tip=20"
   private def batch021 = Batch(0, 0, 20)
 
-  private def exampleDir(name: String): String = {
+  private[queries] def exampleDir(name: String): String = {
     val local = new java.io.File(s"examples/$name")
     if (local.isDirectory) local.getPath else s"/root/repo/examples/$name"
   }
 
-  private def registerFns(s: SparkSession): Unit = {
-    graft.functions.EvmFunctions.registerAll(s)
-    graft.functions.HexExpressions.registerAll(s)
-  }
-
   private def tmpSink(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-q-$tag").resolve("sink").toString
+
+  /** A child session with the template functions registered, as
+    * `SqlPipeline.run` uses: the templates' `source`/`buffer_S_E` views
+    * stay private to one query while the driver runs queries at once. */
+  private def pipelineSession(s: SparkSession): SparkSession = {
+    val session = s.newSession()
+    graft.functions.EvmFunctions.registerAll(session)
+    graft.functions.HexExpressions.registerAll(session)
+    session
+  }
+
+  /** One template transform over blocks 0..20 — no runner, and the
+    * sink the yaml names is never read or written. */
+  private def templateTransform(s: SparkSession, name: String,
+      vars: Map[String, String]): DataFrame =
+    SqlPipeline.definition(exampleDir(name), vars + ("SINK_PATH" -> "unused"))
+      .transform(pipelineSession(s), batch021)
+
+  /** Run a chain template over the fake chain into a fresh sink. */
+  private def chainSink(s: SparkSession, name: String, tag: String,
+      rpc: String = chain): String = {
+    val path = tmpSink(tag)
+    SqlPipeline.run(s, exampleDir(name), Map("RPC_ENDPOINT" -> rpc, "SINK_PATH" -> path),
+      c => c.copy(maxBatchSize = 21))
+    path
+  }
+
+  private val transferSig = "'event Transfer(address indexed,address indexed,uint256)'"
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // hex quantity codec — oracle-able against DuckDB to_hex.
@@ -60,7 +85,7 @@ object EvmOps extends QueryPack {
     // is not canonicalized stably by the driver's hasher.
     "e53_blocks_transform" -> ((s, _) => {
       import graft.functions.HexExpressions.u256ToStringN
-      EthereumPipelines.blocksTransform(s, batch021, endpoint)
+      templateTransform(s, "ethereum_blocks_spark", Map("RPC_ENDPOINT" -> chain))
         .select(col("number"), col("timestamp"), evmHexEncode(col("hash")).as("hash_hex"),
           col("gas_used"), u256ToStringN(col("base_fee_per_gas")).as("base_fee_per_gas"))
         .orderBy(col("number"))
@@ -68,7 +93,7 @@ object EvmOps extends QueryPack {
 
     // logs fetch: double explode + broadcast header join.
     "e54_logs_transform" -> ((s, _) => {
-      EthereumPipelines.logsTransform(s, batch021, endpoint)
+      templateTransform(s, "ethereum_logs_spark", Map("RPC_ENDPOINT" -> chain))
         .select(col("block_number"), col("log_index"),
           evmHexEncode(col("address")).as("address_hex"),
           size(col("topics")).as("n_topics"))
@@ -79,8 +104,8 @@ object EvmOps extends QueryPack {
     // including the Dencun + OP-stack conditional column families.
     "e55_transactions_transform" -> ((s, _) => {
       import graft.functions.HexExpressions.u256ToStringN
-      EthereumPipelines.transactionsTransform(s, batch021, endpoint,
-          enableDencun = true, enableOpStack = true)
+      templateTransform(s, "ethereum_transactions_spark", Map("RPC_ENDPOINT" -> chain,
+          "ENABLE_DENCUN" -> "true", "ENABLE_OP_STACK" -> "true"))
         .select(col("block_number"), col("transaction_index"), col("gas"),
           col("cumulative_gas_used"), col("status"),
           u256ToStringN(col("value")).as("value"),
@@ -91,10 +116,10 @@ object EvmOps extends QueryPack {
 
     // end-to-end micro-batch pipeline: fetch → ordered commit → dedup read.
     "e56_blocks_pipeline" -> ((s, _) => {
-      val path = java.nio.file.Files.createTempDirectory("graft-q-blocks")
-        .resolve("sink").toString
-      val defn = EthereumPipelines.blocks(endpoint, path)
-      PipelineRunner.run(s, defn, Config(maxBatchSize = 7, workers = 2))
+      val path = tmpSink("blocks")
+      val defn = SqlPipeline.definition(exampleDir("ethereum_blocks_spark"),
+        Map("RPC_ENDPOINT" -> chain, "SINK_PATH" -> path))
+      PipelineRunner.run(pipelineSession(s), defn, Config(maxBatchSize = 7, workers = 2))
       SinkTable(path, Seq("number"), Some("timestamp")).read(s)
         .select(col("number"), col("gas_used"), col("size"))
         .orderBy(col("number"))
@@ -103,17 +128,9 @@ object EvmOps extends QueryPack {
     // config-driven pipeline: yaml + Spark-SQL templates, no compiled
     // pipeline code (reference `pipeline <url>` UX).
     "e61_config_pipeline" -> ((s, _) => {
-      graft.functions.EvmFunctions.registerAll(s)
-      graft.functions.HexExpressions.registerAll(s)
-      val dir = {
-        val local = new java.io.File("examples/ethereum_blocks_spark")
-        if (local.isDirectory) local.getPath
-        else "/root/repo/examples/ethereum_blocks_spark"
-      }
-      val path = java.nio.file.Files.createTempDirectory("graft-q-sqlpipe")
-        .resolve("sink").toString
-      graft.pipeline.SqlPipeline.run(s, dir,
-        Map("RPC_ENDPOINT" -> "fake://chain?tip=20", "SINK_PATH" -> path),
+      val path = tmpSink("sqlpipe")
+      SqlPipeline.run(s, exampleDir("ethereum_blocks_spark"),
+        Map("RPC_ENDPOINT" -> chain, "SINK_PATH" -> path),
         c => c.copy(maxBatchSize = 7, workers = 2))
       SinkTable(path, Seq("number"), Some("timestamp")).read(s)
         .select(col("number"), col("gas_used"), col("size"))
@@ -123,23 +140,12 @@ object EvmOps extends QueryPack {
     // config-driven DERIVED pipeline: upstream logs sink → decoded sink,
     // defined entirely as yaml + SQL templates (Source section).
     "e62_config_derived" -> ((s, _) => {
-      graft.functions.EvmFunctions.registerAll(s)
-      graft.functions.HexExpressions.registerAll(s)
-      val logsPath = java.nio.file.Files.createTempDirectory("graft-q-dl-src")
-        .resolve("sink").toString
-      PipelineRunner.run(s, EthereumPipelines.logs(endpoint, logsPath),
-        Config(maxBatchSize = 21))
-      val dir = {
-        val local = new java.io.File("examples/ethereum_decoded_logs_spark")
-        if (local.isDirectory) local.getPath
-        else "/root/repo/examples/ethereum_decoded_logs_spark"
-      }
-      val sinkPath = java.nio.file.Files.createTempDirectory("graft-q-dl-out")
-        .resolve("sink").toString
-      graft.pipeline.SqlPipeline.run(s, dir, Map(
+      val logsPath = chainSink(s, "ethereum_logs_spark", "dl-src")
+      val sinkPath = tmpSink("dl-out")
+      SqlPipeline.run(s, exampleDir("ethereum_decoded_logs_spark"), Map(
         "SOURCE_PATH" -> logsPath,
         "SINK_PATH" -> sinkPath,
-        "EVENT_SIGS" -> "'event Transfer(address indexed,address indexed,uint256)'"))
+        "EVENT_SIGS" -> transferSig))
       SinkTable(sinkPath, Seq("address", "signature", "block_number", "log_index"))
         .read(s)
         .select(col("block_number"), col("log_index"), col("signature"),
@@ -149,9 +155,8 @@ object EvmOps extends QueryPack {
 
     // ABI event decode against the dictionary (signature + inputs JSON).
     "e57_decoded_logs" -> ((s, _) => {
-      val dict = DerivedPipelines.AbiDictionary.builtin
-      val lookup = dict.lookupUdf(s)
-      EthereumPipelines.logsTransform(s, batch021, endpoint)
+      val lookup = AbiDictionary.builtin.lookupUdf(s)
+      templateTransform(s, "ethereum_logs_spark", Map("RPC_ENDPOINT" -> chain))
         .withColumn("evt_json", evmDecodeEvent(col("topics"), col("data"),
           lookup(element_at(col("topics"), 1))))
         .filter(get_json_object(col("evt_json"), "$.error").isNull)
@@ -163,9 +168,8 @@ object EvmOps extends QueryPack {
 
     // ABI call decode (selector match on trace input/output).
     "e58_decoded_traces" -> ((s, _) => {
-      val dict = DerivedPipelines.AbiDictionary.builtin
-      val lookup = dict.lookupUdf(s)
-      EthereumPipelines.tracesTransform(s, batch021, endpoint)
+      val lookup = AbiDictionary.builtin.lookupUdf(s)
+      templateTransform(s, "ethereum_traces_spark", Map("RPC_ENDPOINT" -> chain))
         .filter(length(col("input")) >= 4)
         .withColumn("call_json", evmDecodeCall(col("input"), col("output"),
           lookup(substring(col("input"), 1, 4))))
@@ -181,13 +185,10 @@ object EvmOps extends QueryPack {
     // VariantType open-schema decode: inputs as Spark 4 variant, fields
     // extracted with variant_get (no JSON re-parse) — rows-only.
     "e60_decoded_logs_variant" -> ((s, _) => {
-      val logsPath = java.nio.file.Files.createTempDirectory("graft-q-vlogs")
-        .resolve("sink").toString
-      PipelineRunner.run(s, EthereumPipelines.logs(endpoint, logsPath),
-        Config(maxBatchSize = 21))
-      val source = SinkTable(logsPath, Seq("block_number", "log_index"))
-      DerivedPipelines.decodedLogsVariantTransform(s, Batch(0, 0, 20), source,
-          DerivedPipelines.AbiDictionary.builtin)
+      val logsPath = chainSink(s, "ethereum_logs_spark", "vlogs")
+      templateTransform(s, "ethereum_decoded_logs_spark",
+          Map("SOURCE_PATH" -> logsPath, "EVENT_SIGS" -> transferSig))
+        .withColumn("inputs", parse_json(col("inputs")))
         .select(col("block_number"), col("log_index"), col("signature"),
           expr("variant_get(inputs, '$.arg2', 'string')").as("amount"),
           expr("variant_get(inputs, '$.arg0', 'string')").as("sender"))
@@ -196,12 +197,9 @@ object EvmOps extends QueryPack {
 
     // dedup-then-RPC: erc20 balances over a fake-chain logs sink.
     "e59_erc20_balances" -> ((s, _) => {
-      val logsPath = java.nio.file.Files.createTempDirectory("graft-q-logs")
-        .resolve("sink").toString
-      PipelineRunner.run(s, EthereumPipelines.logs(endpoint, logsPath),
-        Config(maxBatchSize = 21))
-      val source = SinkTable(logsPath, Seq("block_number", "log_index"))
-      DerivedPipelines.erc20BalancesTransform(s, Batch(0, 0, 20), source, endpoint)
+      val logsPath = chainSink(s, "ethereum_logs_spark", "logs")
+      templateTransform(s, "ethereum_token_erc20_balances_spark",
+          Map("SOURCE_PATH" -> logsPath, "RPC_ENDPOINT" -> endpoint))
         .select(col("block_number"), evmHexEncode(col("wallet_address")).as("wallet_hex"),
           evmHexEncode(col("token_address")).as("token_hex"),
           col("token_symbol"), col("token_decimals").cast("int").as("token_decimals"),
@@ -217,10 +215,9 @@ object EvmOps extends QueryPack {
     // zip-explode + Dencun/OP conditional families, in template form.
     "e63_config_transactions" -> ((s, _) => {
       import graft.functions.HexExpressions.u256ToStringN
-      registerFns(s)
       val path = tmpSink("cfg-txs")
-      graft.pipeline.SqlPipeline.run(s, exampleDir("ethereum_transactions_spark"),
-        Map("RPC_ENDPOINT" -> "fake://chain?tip=20", "SINK_PATH" -> path,
+      SqlPipeline.run(s, exampleDir("ethereum_transactions_spark"),
+        Map("RPC_ENDPOINT" -> chain, "SINK_PATH" -> path,
           "ENABLE_DENCUN" -> "true", "ENABLE_OP_STACK" -> "true"),
         c => c.copy(maxBatchSize = 7, workers = 2))
       SinkTable(path, Seq("block_number", "transaction_index"), Some("timestamp"))
@@ -235,10 +232,9 @@ object EvmOps extends QueryPack {
 
     // chained ARRAY JOIN (receipts → logs) in template form.
     "e64_config_logs" -> ((s, _) => {
-      registerFns(s)
       val path = tmpSink("cfg-logs")
-      graft.pipeline.SqlPipeline.run(s, exampleDir("ethereum_logs_spark"),
-        Map("RPC_ENDPOINT" -> "fake://chain?tip=20", "SINK_PATH" -> path),
+      SqlPipeline.run(s, exampleDir("ethereum_logs_spark"),
+        Map("RPC_ENDPOINT" -> chain, "SINK_PATH" -> path),
         c => c.copy(maxBatchSize = 7, workers = 2))
       SinkTable(path, Seq("block_number", "log_index"), Some("timestamp")).read(s)
         .select(col("block_number"), col("log_index"),
@@ -250,10 +246,9 @@ object EvmOps extends QueryPack {
     // computed-index receipts[pos+1] lookup in template form.
     "e65_config_traces" -> ((s, _) => {
       import graft.functions.HexExpressions.u256ToStringN
-      registerFns(s)
       val path = tmpSink("cfg-traces")
-      graft.pipeline.SqlPipeline.run(s, exampleDir("ethereum_traces_spark"),
-        Map("RPC_ENDPOINT" -> "fake://chain?tip=20", "SINK_PATH" -> path),
+      SqlPipeline.run(s, exampleDir("ethereum_traces_spark"),
+        Map("RPC_ENDPOINT" -> chain, "SINK_PATH" -> path),
         c => c.copy(maxBatchSize = 7, workers = 2))
       SinkTable(path, Seq("block_number", "transaction_index", "trace_address"),
           Some("timestamp")).read(s)
@@ -267,12 +262,9 @@ object EvmOps extends QueryPack {
 
     // derived call-decode over a traces sink, in template form.
     "e66_config_decoded_traces" -> ((s, _) => {
-      registerFns(s)
-      val tracesPath = tmpSink("cfg-dtr-src")
-      PipelineRunner.run(s, EthereumPipelines.traces(endpoint, tracesPath),
-        Config(maxBatchSize = 21))
+      val tracesPath = chainSink(s, "ethereum_traces_spark", "cfg-dtr-src")
       val path = tmpSink("cfg-dtr-out")
-      graft.pipeline.SqlPipeline.run(s, exampleDir("ethereum_decoded_traces_spark"),
+      SqlPipeline.run(s, exampleDir("ethereum_decoded_traces_spark"),
         Map("SOURCE_PATH" -> tracesPath, "SINK_PATH" -> path,
           "CALL_SIGS" -> "'function transfer(address,uint256)(bool)'"))
       SinkTable(path,
@@ -287,12 +279,9 @@ object EvmOps extends QueryPack {
     // the 5-CTE aggregate-then-RPC chain, in template form.
     "e67_config_erc20_balances" -> ((s, _) => {
       import graft.functions.HexExpressions.u256ToStringN
-      registerFns(s)
-      val logsPath = tmpSink("cfg-bal-src")
-      PipelineRunner.run(s, EthereumPipelines.logs(endpoint, logsPath),
-        Config(maxBatchSize = 21))
+      val logsPath = chainSink(s, "ethereum_logs_spark", "cfg-bal-src")
       val path = tmpSink("cfg-bal-out")
-      graft.pipeline.SqlPipeline.run(s,
+      SqlPipeline.run(s,
         exampleDir("ethereum_token_erc20_balances_spark"),
         Map("SOURCE_PATH" -> logsPath, "SINK_PATH" -> path,
           "RPC_ENDPOINT" -> endpoint))
@@ -310,7 +299,6 @@ object EvmOps extends QueryPack {
     // chain). Bounded to the first 10 source days so the 1-day batches
     // stay cheap at any sf.
     "e68_config_daily_export" -> ((s, dir) => {
-      registerFns(s)
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("ts").as("timestamp"))
@@ -319,7 +307,7 @@ object EvmOps extends QueryPack {
       val srcPath = tmpSink("cfg-exp-src")
       SinkTable(srcPath, Seq("event_id"), Some("timestamp")).append(bounded, 0)
       val targetPath = tmpSink("cfg-exp-out")
-      graft.pipeline.SqlPipeline.run(s, exampleDir("table_to_daily_parquet_file_spark"),
+      SqlPipeline.run(s, exampleDir("table_to_daily_parquet_file_spark"),
         Map("SOURCE_PATH" -> srcPath, "SOURCE_KEYS" -> "event_id",
           "TARGET_PATH" -> targetPath))
       s.read.parquet(targetPath)
@@ -330,16 +318,15 @@ object EvmOps extends QueryPack {
     // daily-parquet export of a decoded-logs sink over a slow multi-day
     // fake chain (blocktime=14400 → 6 blocks/day).
     "e69_config_decoded_logs_export" -> ((s, _) => {
-      registerFns(s)
-      val multi = "fake://chain?tip=20&blocktime=14400"
-      val logsPath = tmpSink("cfg-dexp-logs")
-      PipelineRunner.run(s, EthereumPipelines.logs(multi, logsPath),
-        Config(maxBatchSize = 21))
+      val logsPath = chainSink(s, "ethereum_logs_spark", "cfg-dexp-logs",
+        rpc = "fake://chain?tip=20&blocktime=14400")
       val decodedPath = tmpSink("cfg-dexp-dec")
-      PipelineRunner.run(s, DerivedPipelines.decodedLogs(logsPath, decodedPath,
-        DerivedPipelines.AbiDictionary.builtin), Config(maxBatchSize = 21))
+      SqlPipeline.run(s, exampleDir("ethereum_decoded_logs_spark"), Map(
+          "SOURCE_PATH" -> logsPath, "SINK_PATH" -> decodedPath,
+          "EVENT_SIGS" -> transferSig),
+        c => c.copy(maxBatchSize = 21))
       val targetPath = tmpSink("cfg-dexp-out")
-      graft.pipeline.SqlPipeline.run(s,
+      SqlPipeline.run(s,
         exampleDir("decoded_logs_to_daily_parquet_file_spark"),
         Map("SOURCE_PATH" -> decodedPath, "TARGET_PATH" -> targetPath))
       s.read.parquet(targetPath)

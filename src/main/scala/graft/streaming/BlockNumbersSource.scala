@@ -27,7 +27,9 @@ import graft.evm.{Json, Rpc}
   *
   * Usage: spark.readStream.format("graft-blocks").option("endpoint", …)
   * .load() → a stream of rows (n: long) to compose with the same
-  * projections the batch pipelines use (EthereumPipelines.blocksProject).
+  * projections the batch pipelines use: register it as a view and run
+  * the fetch + typed extraction of examples/ethereum_blocks_spark over
+  * it in place of `range(START, END + 1)`.
   */
 class BlockNumbersSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {

@@ -93,7 +93,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("daily export partitions by date and resumes past exported days") {
-    import graft.pipeline.{DerivedPipelines, PipelineRunner, SinkTable}
+    import graft.pipeline.{PipelineRunner, SinkTable, SqlPipeline}
     val src = java.nio.file.Files.createTempDirectory("graft-exp-src").resolve("sink").toString
     val dst = java.nio.file.Files.createTempDirectory("graft-exp-dst").resolve("out").toString
     // source sink: 3 days of rows
@@ -103,7 +103,8 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.toDF("timestamp", "block_number", "v")
     val sink = SinkTable(src, Seq("block_number"), Some("timestamp"))
     sink.append(rows, 0)
-    val defn = DerivedPipelines.dailyExport(src, Seq("block_number"), dst)
+    val defn = SqlPipeline.definition("examples/table_to_daily_parquet_file_spark",
+      Map("SOURCE_PATH" -> src, "SOURCE_KEYS" -> "block_number", "TARGET_PATH" -> dst))
     // the per-day batch reads ONLY the yyyyMM partitions covering its day
     // range — a real PartitionFilters entry on the parquet scan, not a
     // post-scan filter (the whole point of deriving _part from the batch)

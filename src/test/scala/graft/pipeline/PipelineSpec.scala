@@ -24,6 +24,15 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.createTempDirectory(s"graft-$name").resolve("sink").toString
 
   private val endpoint = "fake://chain?tip=25#fail-on-error=true&fail-on-null=true"
+  /** The chain templates append the `#fail-on-…` fragment themselves. */
+  private val chain = "fake://chain?tip=25"
+
+  /** A pipeline run from its examples/ yaml + SQL templates. */
+  private def pipeline(name: String, vars: (String, String)*): PipelineRunner.Definition = {
+    graft.functions.EvmFunctions.registerAll(spark)
+    graft.functions.HexExpressions.registerAll(spark)
+    SqlPipeline.definition(s"examples/$name", vars.toMap)
+  }
 
   test("plan splits ranges like the reference Batcher") {
     val batches = PipelineRunner.plan(0, 25, 10)
@@ -46,7 +55,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("blocks pipeline: end-to-end, resume, idempotent re-run") {
     val path = tmp("blocks")
-    val defn = EthereumPipelines.blocks(endpoint, path)
+    val defn = pipeline("ethereum_blocks_spark", "RPC_ENDPOINT" -> chain, "SINK_PATH" -> path)
     val sink = SinkTable(path, Seq("number"), Some("timestamp"))
 
     val r1 = PipelineRunner.run(spark, defn,
@@ -76,7 +85,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("logs pipeline produces one Transfer log per fake tx") {
     val path = tmp("logs")
-    val defn = EthereumPipelines.logs(endpoint, path)
+    val defn = pipeline("ethereum_logs_spark", "RPC_ENDPOINT" -> chain, "SINK_PATH" -> path)
     PipelineRunner.run(spark, defn, Config(maxBatchSize = 10, workers = 2))
     val sink = SinkTable(path, Seq("block_number", "log_index"))
     val logs = sink.read(spark)
@@ -89,7 +98,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("transactions pipeline zips txs with receipts positionally") {
     val path = tmp("tx")
-    val defn = EthereumPipelines.transactions(endpoint, path)
+    val defn = pipeline("ethereum_transactions_spark",
+      "RPC_ENDPOINT" -> chain, "SINK_PATH" -> path, "ENABLE_DENCUN" -> "true")
     PipelineRunner.run(spark, defn, Config(maxBatchSize = 13))
     val sink = SinkTable(path, Seq("block_number", "transaction_index"))
     val txs = sink.read(spark)
@@ -111,7 +121,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("traces pipeline decodes action/result sections") {
     val path = tmp("traces")
-    val defn = EthereumPipelines.traces(endpoint, path)
+    val defn = pipeline("ethereum_traces_spark", "RPC_ENDPOINT" -> chain, "SINK_PATH" -> path)
     PipelineRunner.run(spark, defn, Config(maxBatchSize = 26))
     val sink = SinkTable(path,
       Seq("block_number", "transaction_index", "trace_address"))
@@ -140,8 +150,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("transactions op-stack conditional family decodes receipt fields") {
     val batch = PipelineRunner.Batch(0, 0, 12)
-    val txs = EthereumPipelines.transactionsTransform(spark, batch, endpoint,
-      enableDencun = true, enableOpStack = true)
+    val txs = pipeline("ethereum_transactions_spark", "RPC_ENDPOINT" -> chain,
+        "SINK_PATH" -> tmp("tx-op"), "ENABLE_DENCUN" -> "true", "ENABLE_OP_STACK" -> "true")
+      .transform(spark, batch)
     import org.apache.spark.sql.functions._
     assert(txs.columns.contains("l1_fee") && txs.columns.contains("source_hash"))
     assert(txs.filter(col("is_system_tx")).count() == 0)
@@ -155,19 +166,22 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(whale == graft.evm.FakeChain.valueOf(2, 1).toString)
     assert(BigInt(whale) > BigInt(10).pow(20))
     // flags off → the families are absent (template-var keyed projection)
-    val bare = EthereumPipelines.transactionsTransform(spark, batch, endpoint,
-      enableDencun = false, enableOpStack = false)
+    val bare = pipeline("ethereum_transactions_spark", "RPC_ENDPOINT" -> chain,
+        "SINK_PATH" -> tmp("tx-bare"), "ENABLE_DENCUN" -> "false", "ENABLE_OP_STACK" -> "false")
+      .transform(spark, batch)
     assert(!bare.columns.contains("max_fee_per_blob_gas"))
     assert(!bare.columns.contains("l1_fee"))
   }
 
   test("decoded logs pipeline: dictionary decode keeps only matches") {
     val logsPath = tmp("logs2")
-    PipelineRunner.run(spark, EthereumPipelines.logs(endpoint, logsPath),
+    PipelineRunner.run(spark,
+      pipeline("ethereum_logs_spark", "RPC_ENDPOINT" -> chain, "SINK_PATH" -> logsPath),
       Config(maxBatchSize = 26))
     val decodedPath = tmp("decoded")
-    val defn = DerivedPipelines.decodedLogs(logsPath, decodedPath,
-      DerivedPipelines.AbiDictionary.builtin)
+    val defn = pipeline("ethereum_decoded_logs_spark",
+      "SOURCE_PATH" -> logsPath, "SINK_PATH" -> decodedPath,
+      "EVENT_SIGS" -> "'event Transfer(address indexed,address indexed,uint256)'")
     PipelineRunner.run(spark, defn, Config(maxBatchSize = 1000))
     val decoded = SinkTable(decodedPath,
       Seq("address", "signature", "block_number", "log_index")).read(spark)
@@ -183,10 +197,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("erc20 balances pipeline: dedup-then-rpc with token metadata join") {
     val logsPath = tmp("logs3")
-    PipelineRunner.run(spark, EthereumPipelines.logs(endpoint, logsPath),
+    PipelineRunner.run(spark,
+      pipeline("ethereum_logs_spark", "RPC_ENDPOINT" -> chain, "SINK_PATH" -> logsPath),
       Config(maxBatchSize = 26))
     val balPath = tmp("balances")
-    val defn = DerivedPipelines.erc20Balances(logsPath, balPath, endpoint)
+    val defn = pipeline("ethereum_token_erc20_balances_spark",
+      "SOURCE_PATH" -> logsPath, "SINK_PATH" -> balPath, "RPC_ENDPOINT" -> endpoint)
     PipelineRunner.run(spark, defn, Config(maxBatchSize = 1000))
     val bal = SinkTable(balPath,
       Seq("wallet_address", "token_address", "block_number")).read(spark)
@@ -238,6 +254,48 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(e.getMessage.contains("deterministic bug"))
     assert(attempts.get() == 1) // surfaced on attempt 1, no 3x re-run
+  }
+
+  /** Batch `failAt` of blocks 0..tip throws a fatal (non-NonFatal) error. */
+  private def fatalAt(tipOffset: Long, failAt: Long): PipelineRunner.Definition =
+    new PipelineRunner.Definition {
+      def resume(s: SparkSession): Option[Long] = None
+      def tip(s: SparkSession): Long = tipOffset
+      def transform(s: SparkSession, b: Batch) = {
+        if (b.number == failAt) throw new LinkageError("injected fatal error")
+        s.range(b.start, b.end + 1).toDF("n")
+      }
+      def commit(s: SparkSession, b: Batch, df: org.apache.spark.sql.DataFrame): Unit = ()
+    }
+
+  /** Run on a separate thread, bounded by a timeout, so a hung runner
+    * fails the test instead of the suite. */
+  private def runBounded(defn: PipelineRunner.Definition, conf: Config): Throwable = {
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      val run = pool.submit(new java.util.concurrent.Callable[PipelineRunner.Result] {
+        def call(): PipelineRunner.Result = PipelineRunner.run(spark, defn, conf)
+      })
+      try {
+        val res = run.get(60, java.util.concurrent.TimeUnit.SECONDS)
+        fail(s"run succeeded despite a fatal error: $res")
+      } catch {
+        case e: java.util.concurrent.ExecutionException => e.getCause
+        case _: java.util.concurrent.TimeoutException =>
+          run.cancel(true)
+          fail("runner hung after a fatal error in a worker")
+      }
+    } finally pool.shutdownNow()
+  }
+
+  test("a fatal error in one of several batches fails the run instead of hanging") {
+    val e = runBounded(fatalAt(29, failAt = 1), Config(maxBatchSize = 10, workers = 2))
+    assert(e.isInstanceOf[LinkageError] && e.getMessage == "injected fatal error")
+  }
+
+  test("a fatal error in a single-batch run is rethrown, not reported as success") {
+    val e = runBounded(fatalAt(9, failAt = 0), Config(maxBatchSize = 10, workers = 2))
+    assert(e.isInstanceOf[LinkageError] && e.getMessage == "injected fatal error")
   }
 
   test("sink compact drops superseded versions but keeps dedup semantics") {

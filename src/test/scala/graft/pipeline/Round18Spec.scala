@@ -86,9 +86,11 @@ class Round18Spec extends AnyFunSuite with BeforeAndAfterAll {
     graft.functions.HexExpressions.registerAll(spark)
     // upstream logs sink at tip 10
     val logsPath = tmp("r18-logs")
-    PipelineRunner.run(spark,
-      EthereumPipelines.logs("fake://chain?tip=10", logsPath),
-      PipelineRunner.Config(maxBatchSize = 11))
+    def runLogs(tip: Int, batchSize: Long): Unit =
+      SqlPipeline.run(spark, "examples/ethereum_logs_spark",
+        Map("RPC_ENDPOINT" -> s"fake://chain?tip=$tip", "SINK_PATH" -> logsPath),
+        c => c.copy(maxBatchSize = batchSize))
+    runLogs(10, batchSize = 11)
     val dir = {
       val local = new java.io.File("examples/ethereum_decoded_logs_spark")
       if (local.isDirectory) local.getPath
@@ -104,9 +106,7 @@ class Round18Spec extends AnyFunSuite with BeforeAndAfterAll {
     graft.functions.HexExpressions.registerAll(session)
     assert(defn.tip(session) == 10L)
     // source advances AFTER the probe (a follow-mode pass boundary)
-    PipelineRunner.run(spark,
-      EthereumPipelines.logs("fake://chain?tip=15", logsPath),
-      PipelineRunner.Config(maxBatchSize = 5))
+    runLogs(15, batchSize = 5)
     // the next poll's refresh must see the newly landed files: the
     // probed tip equals the source sink's REAL high-water mark (not
     // the stale pre-advance 10)

@@ -55,12 +55,30 @@ class BlockStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("composes with the shared blocks projection") {
-    import graft.pipeline.EthereumPipelines
-    val stream = spark.readStream.format("graft-blocks")
+    graft.functions.EvmFunctions.registerAll(spark)
+    graft.functions.HexExpressions.registerAll(spark)
+    spark.readStream.format("graft-blocks")
       .option("endpoint", "fake://chain?tip=12")
       .load()
-    val projected = EthereumPipelines.blocksProject(stream,
-      "fake://chain?tip=12#fail-on-error=true")
+      .createOrReplaceTempView("block_numbers")
+    // the fetch + typed extraction of examples/ethereum_blocks_spark,
+    // over the stream instead of range(START, END + 1)
+    val projected = spark.sql(
+      """select
+        |    timestamp_seconds(evm_hex_decode_int_n(b.timestamp)) as timestamp,
+        |    evm_hex_decode_int_n(b.gasUsed) as gas_used,
+        |    evm_hex_decode_n(b.hash) as hash,
+        |    evm_hex_decode_int_n(b.number) as number
+        |from (
+        |    select from_json(
+        |        get_json_object(
+        |            ethereum_rpc('eth_getBlockByNumber',
+        |                array(evm_hex_encode_int_n(n), 'false'),
+        |                'fake://chain?tip=12#fail-on-error=true'),
+        |            '$.value'),
+        |        'timestamp STRING, gasUsed STRING, hash STRING, number STRING') as b
+        |    from block_numbers
+        |)""".stripMargin)
     val q = projected.writeStream.format("memory").queryName("blkproj").start()
     try q.processAllAvailable() finally q.stop()
     val rows = spark.table("blkproj")
