@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import PostingPairs._
 
 /** Multimodal column plumbing: media as opaque `binary` payloads with
   * typed metadata, batch-shaped decode/feature/frame operators via typed
@@ -989,7 +990,7 @@ object Multimodal {
     * reach `minMatch`. The (frame_idx, code) bucket IS the inverted
     * index (13-bit codes per frame position), so candidate generation
     * is posting-list pair expansion exactly like the shingle path
-    * ([[graft.operators.TextDedup]] pairCounts) — no all-pairs scan
+    * ([[PostingPairs]]) — no all-pairs scan
     * and no self-join that hashes the full index twice.
     *
     * `codes` is materialized ONCE via [[Materialize.eager]]: the WAV
@@ -1024,31 +1025,12 @@ object Multimodal {
   private def alignedCodePairs(codes: DataFrame, minMatch: Double,
       maxDf: Int): DataFrame = {
     val sizes = codes.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
-    val bucketed =
-      if (maxDf <= 0) codes
-      else codes.join(
-        codes.groupBy(col("frame_idx"), col("code"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("frame_idx"), col("code")),
-        Seq("frame_idx", "code"), "left_semi")
+    val keys = Seq("frame_idx", "code")
     // posting lists per bucket → ordered pairs → per-pair counts (one
     // doc appears at most once per bucket, so lists are duplicate-free)
-    val kept = bucketed.groupBy(col("frame_idx"), col("code"))
-      .agg(collect_list(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    val pairs = kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
-    pairs.groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(count(lit(1)).as("c"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("nf").as("na")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("nf").as("nb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("c").cast("double") / least(col("na"), col("nb")), 6)
-          .as("match_frac"))
-      .filter(col("match_frac") >= minMatch)
+    overlapFrac(
+      pairCounts(postings(capDf(codes, keys, maxDf), keys, col("doc_id"))),
+      sizes, "nf", minMatch)
   }
 
   /** Per-document spectral frame codes ([[spectralFrameCodes]]) as a
@@ -1446,18 +1428,8 @@ object Multimodal {
     // with — a threshold screen against a rolling-built index (or vice
     // versa) is a cross-detector mismatch and must fail fast
     val ver = if (rolling) OnsetRollingFpVersion else OnsetFpVersion
-    require(index.columns.contains("fp_ver"),
-      s"onset index has no fp_ver column: it predates fingerprint " +
-        s"version $ver — rebuild it with " +
-        "audioOnsetLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(ver))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"onset index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $ver (detector-encoded: 4001 threshold / 4002 " +
-        "rolling) — rebuild it with audioOnsetLandmarkIndex before " +
-        "screening (cross-version landmarks never match)")
+    requireFpVersion(index, ver, "onset", "audioOnsetLandmarkIndex",
+      " (detector-encoded: 4001 threshold / 4002 rolling)")
     val lms = Materialize.eager(
       (if (rolling) spectralOnsetLandmarksRolling(media, codesPerOnset,
          ratio, rmsMs, minGapMs, minAbs)
@@ -1612,18 +1584,8 @@ object Multimodal {
       minMatch: Double = 0.6, nRatios: Int = 5, qStep: Double = 0.2,
       threshold: Int = 1024, minSilenceMs: Int = 8)(
       implicit s: SparkSession): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"interval index has no fp_ver column: it predates fingerprint " +
-        s"version $IntervalFpVersion — rebuild it with " +
-        "audioIntervalLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(IntervalFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"interval index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $IntervalFpVersion — rebuild it with " +
-        "audioIntervalLandmarkIndex before screening (cross-version " +
-        "landmarks never match)")
+    requireFpVersion(index, IntervalFpVersion, "interval",
+      "audioIntervalLandmarkIndex")
     val lms = Materialize.eager(
       onsetIntervalLandmarks(media, nRatios, qStep, threshold,
         minSilenceMs).toDF())
@@ -1903,18 +1865,8 @@ object Multimodal {
       minMatch: Double = 0.6, cyc: Int = 12, threshold: Int = 1024,
       minSilenceMs: Int = 8, div: Int = 12, folds: Int = 1)(
       implicit s: SparkSession): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"chroma index has no fp_ver column: it predates fingerprint " +
-        s"version $ChromaFpVersion — rebuild it with " +
-        "audioChromaLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(ChromaFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"chroma index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $ChromaFpVersion — rebuild it with " +
-        "audioChromaLandmarkIndex before screening (cross-version " +
-        "landmarks never match)")
+    requireFpVersion(index, ChromaFpVersion, "chroma",
+      "audioChromaLandmarkIndex")
     val lms = Materialize.eager(
       chromaOnsetLandmarks(media, cyc, threshold, minSilenceMs, div,
         folds).toDF())
@@ -2307,16 +2259,7 @@ object Multimodal {
 
   private def screenAgainstCodeIndex(codes: DataFrame, index: DataFrame,
       minMatch: Double, ver: Int, builder: String): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"audio index has no fp_ver column: it predates fingerprint " +
-        s"version $ver — rebuild it with $builder before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(ver))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"audio index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $ver — rebuild it with $builder before " +
-        "screening (cross-version codes never match)")
+    requireFpVersion(index, ver, "audio", builder)
     val nf = codes.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
     val dup = codes.join(
         index.select(col("frame_idx"), col("code"),
@@ -2381,27 +2324,10 @@ object Multimodal {
   private def landmarkPairScores(lms: DataFrame, minMatch: Double,
       maxDf: Int): DataFrame = {
     val sizes = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val bucketed =
-      if (maxDf <= 0) lms
-      else lms.join(
-        lms.groupBy(col("lm")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf).select(col("lm")),
-        Seq("lm"), "left_semi")
-    val kept = bucketed.groupBy(col("lm"))
-      .agg(collect_list(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    val pairs = kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
-    pairs.groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(count(lit(1)).as("c"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("nl").as("na")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("nl").as("nb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("c").cast("double") / least(col("na"), col("nb")), 6)
-          .as("match_frac"))
-      .filter(col("match_frac") >= minMatch)
+    overlapFrac(
+      pairCounts(postings(capDf(lms, Seq("lm"), maxDf), Seq("lm"),
+        col("doc_id"))),
+      sizes, "nl", minMatch)
   }
 
   /** 64-bit perceptual hash (pHash) of an image payload — the IMAGE
@@ -2415,7 +2341,7 @@ object Multimodal {
     * or lightly-edited images land within a few bits; unrelated images
     * scatter to ~32. None for undecodable payloads. */
   /** EXIF orientation (1-8) of a JPEG payload, 0 when absent or not a
-    * JPEG: walks the marker stream to the APP1 "Exif  "
+    * JPEG: walks the marker stream to the APP1 "Exif\u0000\u0000"
     * segment, then the embedded TIFF IFD0 for tag 0x0112. Handles both
     * byte orders ("II"/"MM"); any malformed structure returns 0 (the
     * sniff is bytes, not trust). Stops at SOS — EXIF precedes entropy
@@ -2771,20 +2697,10 @@ object Multimodal {
     // cap BEFORE the posting-list aggregation (left_semi on per-key df
     // counts): one row per (doc, chunk), so df == bucket size and the
     // hot bucket never materializes inside one collect_list task
-    val capped = if (maxDf <= 0) chunks
-      else chunks.join(
-        chunks.groupBy(col("chunk"), col("ckey"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
-    val kept = capped.groupBy(col("chunk"), col("ckey"))
-      .agg(collect_list(struct(col("doc_id"), col("ph"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
+    val keys = Seq("chunk", "ckey")
+    postings(capDf(chunks, keys, maxDf), keys,
+        struct(col("doc_id"), col("ph")))
+      .select(explode(orderedPairs(col("ds"), "a", "b")).as("p"))
       .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
         bit_count(col("p.a.ph").bitwiseXOR(col("p.b.ph"))).as("dist"))
       .filter(col("dist") <= maxDist)
@@ -2826,20 +2742,10 @@ object Multimodal {
     // df counts DISTINCT docs, not orientation rows — maxDf keeps its
     // per-doc meaning from pHashPairs even though each doc contributes
     // multiple orientation rows per bucket here
-    val capped = if (maxDf <= 0) chunks
-      else chunks.join(
-        chunks.groupBy(col("chunk"), col("ckey"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
-    val kept = capped.groupBy(col("chunk"), col("ckey"))
-      .agg(collect_list(struct(col("doc_id"), col("h"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
+    val keys = Seq("chunk", "ckey")
+    postings(capDf(chunks, keys, maxDf, distinctDocs = true), keys,
+        struct(col("doc_id"), col("h")))
+      .select(explode(orderedPairs(col("ds"), "a", "b")).as("p"))
       .filter(col("p.a.doc_id") =!= col("p.b.doc_id"))
       .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
         bit_count(col("p.a.h").bitwiseXOR(col("p.b.h"))).as("dist"))
@@ -2875,20 +2781,10 @@ object Multimodal {
     // df counts DISTINCT docs, not orientation rows — maxDf keeps its
     // per-doc meaning from pHashPairs even though each doc contributes
     // multiple orientation rows per bucket here
-    val capped = if (maxDf <= 0) chunks
-      else chunks.join(
-        chunks.groupBy(col("chunk"), col("ckey"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
-    val kept = capped.groupBy(col("chunk"), col("ckey"))
-      .agg(collect_list(struct(col("doc_id"), col("h"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
+    val keys = Seq("chunk", "ckey")
+    postings(capDf(chunks, keys, maxDf, distinctDocs = true), keys,
+        struct(col("doc_id"), col("h")))
+      .select(explode(orderedPairs(col("ds"), "a", "b")).as("p"))
       .filter(col("p.a.doc_id") =!= col("p.b.doc_id"))
       .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
         bit_count(col("p.a.h").bitwiseXOR(col("p.b.h"))).as("dist"))
@@ -2921,20 +2817,10 @@ object Multimodal {
           shiftright(col("h"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
       .select(col("doc_id"), col("h"), col("pos").as("chunk"),
         col("col").as("ckey"))
-    val capped = if (maxDf <= 0) chunks
-      else chunks.join(
-        chunks.groupBy(col("chunk"), col("ckey"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
-    val kept = capped.groupBy(col("chunk"), col("ckey"))
-      .agg(collect_list(struct(col("doc_id"), col("h"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
+    val keys = Seq("chunk", "ckey")
+    postings(capDf(chunks, keys, maxDf, distinctDocs = true), keys,
+        struct(col("doc_id"), col("h")))
+      .select(explode(orderedPairs(col("ds"), "a", "b")).as("p"))
       .filter(col("p.a.doc_id") =!= col("p.b.doc_id"))
       .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
         bit_count(col("p.a.h").bitwiseXOR(col("p.b.h"))).as("dist"))
@@ -2976,20 +2862,10 @@ object Multimodal {
           shiftright(col("h"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
       .select(col("doc_id"), col("win"), col("h"), col("pos").as("chunk"),
         col("col").as("ckey"))
-    val capped = if (maxDf <= 0) chunks
-      else chunks.join(
-        chunks.groupBy(col("chunk"), col("ckey"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
-    val kept = capped.groupBy(col("chunk"), col("ckey"))
-      .agg(collect_list(struct(col("doc_id"), col("win"), col("h"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
+    val keys = Seq("chunk", "ckey")
+    postings(capDf(chunks, keys, maxDf, distinctDocs = true), keys,
+        struct(col("doc_id"), col("win"), col("h")))
+      .select(explode(orderedPairs(col("ds"), "a", "b")).as("p"))
       .filter(col("p.a.doc_id") =!= col("p.b.doc_id"))
       .filter(col("p.a.win") === 0 || col("p.b.win") === 0)
       .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
@@ -3230,26 +3106,6 @@ object Multimodal {
     * fresh checkpoint (CHANGELOG state-schema note). */
   val PHashFpVersion: Int = 13002
 
-  /** Fail-fast stamp gate shared by the pHash index screens — the
-    * [[screenAgainstCodeIndex]] pattern: an unstamped (pre-13002)
-    * or cross-version index throws with a rebuild instruction instead
-    * of compiling, running, and matching nothing. The probe is a
-    * `limit(1)` over a constant column — parquet min/max stats prune
-    * it to a metadata read on a real deployment. */
-  private def requirePHashStamp(index: DataFrame, builder: String): Unit = {
-    require(index.columns.contains("fp_ver"),
-      s"pHash index has no fp_ver column: it predates fingerprint " +
-        s"version $PHashFpVersion (EXIF orientation normalization) — " +
-        s"rebuild it with $builder before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(PHashFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"pHash index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $PHashFpVersion — rebuild it with $builder " +
-        "before screening (cross-version hashes match only by luck)")
-  }
-
   /** Screen an ingest batch of images against a pre-built
     * [[pHashChunkIndex]]: the batch decodes + hashes once, equi-joins
     * the index on (chunk, ckey) — pigeonhole-complete for hamming
@@ -3271,7 +3127,7 @@ object Multimodal {
   def dedupAgainstPHashIndex(media: DataFrame, index: DataFrame,
       maxDist: Int = 3, maxDf: Int = 0): DataFrame = {
     require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    requirePHashStamp(index, "pHashChunkIndex")
+    requireFpVersion(index, PHashFpVersion, "pHash", "pHashChunkIndex")
     val hashed = Materialize.eager(
       media.select(col("doc_id"), pHashUdf(col("payload")).as("ph")))
       .filter(col("ph").isNotNull)
@@ -3280,13 +3136,7 @@ object Multimodal {
         shiftright(col("ph"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
       .select(col("doc_id"), col("ph"), col("pos").as("chunk"),
         col("col").as("ckey"))
-    val probed = if (maxDf <= 0) index
-      else index.join(
-        index.groupBy(col("chunk"), col("ckey"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
+    val probed = capDf(index, Seq("chunk", "ckey"), maxDf)
     val dup = chunks.join(
         probed.select(col("chunk"), col("ckey"), col("doc_id").as("src"),
           col("ph").as("cph")),
@@ -3313,7 +3163,7 @@ object Multimodal {
   def dedupAgainstPHashIndexDihedral(media: DataFrame, index: DataFrame,
       maxDist: Int = 3, maxDf: Int = 0): DataFrame = {
     require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    requirePHashStamp(index, "pHashChunkIndex")
+    requireFpVersion(index, PHashFpVersion, "pHash", "pHashChunkIndex")
     val hashed = Materialize.eager(
       media.select(col("doc_id"), pHashDihedralUdf(col("payload")).as("hs")))
       .filter(col("hs").isNotNull)
@@ -3323,13 +3173,7 @@ object Multimodal {
         shiftright(col("h"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
       .select(col("doc_id"), col("h"), col("pos").as("chunk"),
         col("col").as("ckey"))
-    val probed = if (maxDf <= 0) index
-      else index.join(
-        index.groupBy(col("chunk"), col("ckey"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
+    val probed = capDf(index, Seq("chunk", "ckey"), maxDf)
     val dup = chunks.join(
         probed.select(col("chunk"), col("ckey"), col("doc_id").as("src"),
           col("ph").as("cph")),
@@ -3389,7 +3233,8 @@ object Multimodal {
   def dedupAgainstPHashCropIndex(media: DataFrame, index: DataFrame,
       maxDist: Int = 3, maxDf: Int = 0): DataFrame = {
     require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    requirePHashStamp(index, "pHashCropWindowIndex")
+    requireFpVersion(index, PHashFpVersion, "pHash",
+      "pHashCropWindowIndex")
     val hashed = Materialize.eager(
       media.select(col("doc_id"), pHashUdf(col("payload")).as("ph")))
       .filter(col("ph").isNotNull)
@@ -3398,13 +3243,8 @@ object Multimodal {
         shiftright(col("ph"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
       .select(col("doc_id"), col("ph"), col("pos").as("chunk"),
         col("col").as("ckey"))
-    val probed = if (maxDf <= 0) index
-      else index.join(
-        index.groupBy(col("chunk"), col("ckey"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
+    val probed = capDf(index, Seq("chunk", "ckey"), maxDf,
+      distinctDocs = true)
     val dup = chunks.join(
         probed.select(col("chunk"), col("ckey"), col("doc_id").as("src"),
           col("ph").as("cph")),
@@ -3617,7 +3457,7 @@ object Multimodal {
       .groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
     // the df cap applies to the posting row itself (rows are distinct
     // per (doc, orient, lm), so the distinct-DOC df needs the in-row
-    // dedup) — one groupBy(lm) instead of applyDfCap's count
+    // dedup) — one groupBy(lm) instead of PostingPairs.capDf's count
     // aggregation + semi-join back + re-group (two extra full-table
     // shuffles on the same key)
     val kept = lms.groupBy(col("lm"))
@@ -3626,10 +3466,8 @@ object Multimodal {
         dfCapKeep(lms.sparkSession, col("lm"),
           size(array_distinct(transform(col("ds"),
             x => x.getField("doc_id")))), cap, solvedCap))
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
+    val counts = kept
+      .select(explode(orderedPairs(col("ds"), "a", "b")).as("p"))
       .filter(col("p.a.doc_id") < col("p.b.doc_id"))
       .filter(col("p.a.orient") === 0)
       .groupBy(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
@@ -3637,14 +3475,7 @@ object Multimodal {
       .agg(count(lit(1)).as("c"))
       // the same ABSOLUTE evidence floor as peakLandmarkPairScores
       .filter(col("c") >= math.max(1, minShared))
-      .join(n0.select(col("doc_id").as("doc_a"), col("nl").as("na")),
-        Seq("doc_a"))
-      .join(n0.select(col("doc_id").as("doc_b"), col("nl").as("nb")),
-        Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("orient"),
-        round(col("c").cast("double") / least(col("na"), col("nb")), 6)
-          .as("match_frac"))
-      .filter(col("match_frac") >= minMatch)
+    overlapFrac(counts, n0, "nl", minMatch, keep = Seq("orient"))
   }
 
   /** Image near-dup pairs tolerant of ARBITRARY-OFFSET crops — the
@@ -3721,17 +3552,14 @@ object Multimodal {
     val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
     // rows are distinct (doc_id, lm), so the posting size IS the
     // code's distinct-doc df and the cap filters in-row — one
-    // groupBy(lm) instead of applyDfCap's count aggregation +
+    // groupBy(lm) instead of PostingPairs.capDf's count aggregation +
     // semi-join back + re-group (two extra full-table shuffles)
     val kept = lms.groupBy(col("lm"))
       .agg(collect_list(col("doc_id")).as("ds"))
       .filter(size(col("ds")) >= 2 &&
         dfCapKeep(lms.sparkSession, col("lm"), size(col("ds")), cap,
           solvedCap))
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
+    val counts = kept.select(explode(orderedPairs(col("ds"))).as("p"))
       .filter(col("p.doc_a") =!= col("p.doc_b"))
       .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .agg(count(lit(1)).as("c"))
@@ -3743,14 +3571,7 @@ object Multimodal {
       // audio-fingerprint systems require a minimum absolute hit
       // count. 0 (default) preserves the pure relative metric.
       .filter(col("c") >= math.max(1, minShared))
-      .join(nl.select(col("doc_id").as("doc_a"), col("nl").as("na")),
-        Seq("doc_a"))
-      .join(nl.select(col("doc_id").as("doc_b"), col("nl").as("nb")),
-        Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("c").cast("double") / least(col("na"), col("nb")), 6)
-          .as("match_frac"))
-      .filter(col("match_frac") >= minMatch)
+    overlapFrac(counts, nl, "nl", minMatch)
   }
 
   /** PEAK-PATCH landmarks for VIDEO — the m136 tier lifted to the
@@ -3897,13 +3718,8 @@ object Multimodal {
           shiftright(col("d"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
       .select(col("doc_id"), col("pk"), col("d"), col("pos").as("chunk"),
         col("col").as("ckey"))
-    val capped =
-      if (maxDf <= 0) chunks
-      else chunks.join(
-        chunks.groupBy(col("chunk"), col("ckey"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf).select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
+    val capped = capDf(chunks, Seq("chunk", "ckey"), maxDf,
+      distinctDocs = true)
     val cand = capped.select(col("doc_id").as("doc_a"), col("pk").as("pk_a"),
         col("d").as("da"), col("chunk"), col("ckey"))
       .join(capped.select(col("doc_id").as("doc_b"), col("pk").as("pk_b"),
@@ -3974,18 +3790,8 @@ object Multimodal {
       minMatch: Double = 0.75, maxDist: Int = 1, radius: Int = 2,
       patchDesc: Int = 8)(implicit s: SparkSession): DataFrame = {
     require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    require(index.columns.contains("fp_ver"),
-      s"peak-desc index has no fp_ver column: it predates fingerprint " +
-        s"version $PeakDescFpVersion — rebuild it with " +
-        "imagePeakLossyIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(PeakDescFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"peak-desc index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $PeakDescFpVersion — rebuild it with " +
-        "imagePeakLossyIndex before screening (cross-version " +
-        "descriptors never match)")
+    requireFpVersion(index, PeakDescFpVersion, "peak-desc",
+      "imagePeakLossyIndex")
     val u = udf((p: Array[Byte]) => peakBlockDescriptors(p, radius, patchDesc))
     val rows = Materialize.eager(
       media.select(col("doc_id"), u(col("payload")).as("ds")))
@@ -4113,17 +3919,7 @@ object Multimodal {
     * shared-distinct over the smaller set >= minMatch. */
   private def screenPeakIndex(lms: DataFrame, index: DataFrame,
       minMatch: Double, builder: String): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"peak index has no fp_ver column: it predates fingerprint " +
-        s"version $PeakFpVersion — rebuild it with $builder " +
-        "before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(PeakFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"peak index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $PeakFpVersion — rebuild it with $builder " +
-        "before screening (cross-version landmarks never match)")
+    requireFpVersion(index, PeakFpVersion, "peak", builder)
     val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
     val dup = lms.join(
         index.select(col("lm"), col("doc_id").as("src"),
@@ -4452,17 +4248,7 @@ object Multimodal {
   private def screenScaleIndex(lms: DataFrame, index: DataFrame,
       minMatch: Double, builder: String, minShared: Int = 0,
       fpVer: Int = ScaleFpVersion): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"constellation index has no fp_ver column: it predates " +
-        s"fingerprint version $fpVer — rebuild it with " +
-        s"$builder before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(fpVer))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"constellation index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $fpVer — rebuild it with $builder " +
-        "before screening (cross-version landmarks never match)")
+    requireFpVersion(index, fpVer, "constellation", builder)
     val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
     val dup = lms.join(
         index.select(col("lm"), col("doc_id").as("src"),
@@ -4547,18 +4333,8 @@ object Multimodal {
       smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
       minShared: Int = 0)(
       implicit s: SparkSession): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"constellation index has no fp_ver column: it predates " +
-        s"fingerprint version $ScaleFpVersion — rebuild it with " +
-        "imageScaleLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(ScaleFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"constellation index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $ScaleFpVersion — rebuild it with " +
-        "imageScaleLandmarkIndex before screening (cross-version " +
-        "landmarks never match)")
+    requireFpVersion(index, ScaleFpVersion, "constellation",
+      "imageScaleLandmarkIndex")
     val lms = Materialize.eager(
       imageScaleLandmarksOriented(media, kTop, nNear, qStepR, nAng,
         smoothR, radius, minAvg))
@@ -5975,10 +5751,10 @@ object Multimodal {
     * IS the code's distinct-doc df and the cap filters the posting
     * row directly ([[dfCapKeep]]) — and the pair fan-out happens
     * in-row (the [[peakLandmarkPairScores]] explode idiom). The
-    * former shape (applyDfCap's count-agg + semi-join back, then a
-    * two-sided self-join on lm) re-shuffled the full anchored table
-    * ~5x and was the round-14 growth artifact's one super-linear
-    * entry (m186: per-doc wall x1.6 per corpus decade).
+    * former shape (a [[PostingPairs.capDf]] count-agg + semi-join
+    * back, then a two-sided self-join on lm) re-shuffled the full
+    * anchored table ~5x and was the round-14 growth artifact's one
+    * super-linear entry (m186: per-doc wall x1.6 per corpus decade).
     *
     * COUNT-FIRST, GATHER-LATER (round 17): the former single pair
     * aggregation collected the 4-int anchor correspondence for EVERY
@@ -6022,11 +5798,8 @@ object Multimodal {
       .filter(size(col("ps")) >= 2 &&
         dfCapKeep(lms.sparkSession, col("lm"), size(col("ps")), cap,
           solvedCap)))
-    val ds = array_sort(col("ps"))
-    val pairRows = posted.select(
-        explode(flatten(transform(ds, (x, i) =>
-          transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-            y => struct(x.as("a"), y.as("b")))))).as("p"))
+    val pairRows = posted
+      .select(explode(orderedPairs(col("ps"), "a", "b")).as("p"))
       .filter(col("p.a.doc_id") < col("p.b.doc_id"))
     // pass 1: count-only — one posting row per (doc, code) ⇒ each
     // shared code yields this pair exactly once: count(1) == the
@@ -6035,17 +5808,12 @@ object Multimodal {
     // construction — and the set is read three times below (threshold
     // count, pass-2 semi-join, final stats join); the r17 shape
     // recomputed the whole pass-1 aggregation for two of those.
-    val surv = Materialize.eager(pairRows
-      .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= math.max(1, candMinShared))
-      .join(nl.select(col("doc_id").as("doc_a"), col("nl").as("na")),
-        Seq("doc_a"))
-      .join(nl.select(col("doc_id").as("doc_b"), col("nl").as("nb")),
-        Seq("doc_b"))
-      .filter(col("c").cast("double") / least(col("na"), col("nb"))
-        >= candMinMatch))
+    val surv = Materialize.eager(withSizes(pairRows
+        .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"))
+        .groupBy(col("doc_a"), col("doc_b"))
+        .agg(count(lit(1)).as("c"))
+        .filter(col("c") >= math.max(1, candMinShared)), nl, "nl")
+      .filter(smallerFrac >= candMinMatch))
     // SURVIVOR-AWARE GATHER (round 18, guide §2.4 remove work
     // outright): when pass 1 leaves only a handful of survivor PAIRS
     // (the fixture/growth gates: m186 read 1.34x of r16 at n=500 from
@@ -6065,13 +5833,9 @@ object Multimodal {
         val ids = surv.select(col("doc_a"))
           .unionAll(surv.select(col("doc_b")))
           .distinct().collect().map(_.getLong(0)).sorted.toSeq
-        val kds = filter(ds, x =>
+        val kps = filter(col("ps"), x =>
           array_contains(typedlit(ids), x.getField("doc_id")))
-        posted.select(
-            explode(flatten(transform(kds, (x, i) =>
-              transform(slice(kds, i + lit(2),
-                  greatest(size(kds) - i - 1, lit(0))),
-                y => struct(x.as("a"), y.as("b")))))).as("p"))
+        posted.select(explode(orderedPairs(kps, "a", "b")).as("p"))
           .filter(col("p.a.doc_id") < col("p.b.doc_id"))
       } else pairRows
     // pass 2: correspondences for SURVIVORS only (semi-join keeps the
@@ -6296,18 +6060,8 @@ object Multimodal {
     * [[screenScaleIndex]]. */
   private def screenAffineFrameOriented(lms: DataFrame,
       index: DataFrame, minMatch: Double, minShared: Int): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"affine-frame index has no fp_ver column: it predates " +
-        s"fingerprint version $AffineFrameFpVersion — rebuild it " +
-        "with imageAffineFrameIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(AffineFrameFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"affine-frame index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $AffineFrameFpVersion — rebuild it with " +
-        "imageAffineFrameIndex before screening (cross-version " +
-        "landmarks never match)")
+    requireFpVersion(index, AffineFrameFpVersion, "affine-frame",
+      "imageAffineFrameIndex")
     // every readout scores over the IDENTITY (orient 0) code count —
     // the convention the m174 minMatch gate was calibrated on and the
     // one orientedLandmarkPairScores and st125/st126 use: a
@@ -6502,12 +6256,10 @@ object Multimodal {
         dfCapKeep(s, col("lm"),
           size(array_distinct(transform(col("ps"),
             x => x.getField("doc_id")))), maxDf)))
-    val ds = array_sort(col("ps"))
-    // a = the LOWER doc's identity codes (ds sorts by doc_id first,
-    // so the lower doc is always the x element)
-    val pairRows = posted.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
+    // a = the LOWER doc's identity codes (the sorted list orders by
+    // doc_id first, so the lower doc is always the a element)
+    val pairRows = posted
+      .select(explode(orderedPairs(col("ps"), "a", "b")).as("p"))
       .filter(col("p.a.doc_id") < col("p.b.doc_id") &&
         col("p.a.orient") === 0)
     // count-first, gather-later (round 17) — see
@@ -6517,29 +6269,21 @@ object Multimodal {
     // identity tier — survivors are near-dup mass, the set is read
     // three times, and a small survivor set pre-filters the gather
     // explode to survivor docs' entries.
-    val surv = Materialize.eager(pairRows
-      .select(col("p.a.doc_id").as("doc_a"),
-        col("p.b.doc_id").as("doc_b"), col("p.b.orient").as("orient"))
-      .groupBy(col("doc_a"), col("doc_b"), col("orient"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= math.max(1, candMinShared))
-      .join(nl.select(col("doc_id").as("doc_a"), col("nl").as("na")),
-        Seq("doc_a"))
-      .join(nl.select(col("doc_id").as("doc_b"), col("nl").as("nb")),
-        Seq("doc_b"))
-      .filter(col("c").cast("double") / least(col("na"), col("nb"))
-        >= candMinMatch))
+    val surv = Materialize.eager(withSizes(pairRows
+        .select(col("p.a.doc_id").as("doc_a"),
+          col("p.b.doc_id").as("doc_b"), col("p.b.orient").as("orient"))
+        .groupBy(col("doc_a"), col("doc_b"), col("orient"))
+        .agg(count(lit(1)).as("c"))
+        .filter(col("c") >= math.max(1, candMinShared)), nl, "nl")
+      .filter(smallerFrac >= candMinMatch))
     val gatherRows =
       if (surv.count() <= survivorGatherMaxPairs) {
         val ids = surv.select(col("doc_a"))
           .unionAll(surv.select(col("doc_b")))
           .distinct().collect().map(_.getLong(0)).sorted.toSeq
-        val kds = filter(ds, x =>
+        val kps = filter(col("ps"), x =>
           array_contains(typedlit(ids), x.getField("doc_id")))
-        posted.select(explode(flatten(transform(kds, (x, i) =>
-            transform(slice(kds, i + lit(2),
-                greatest(size(kds) - i - 1, lit(0))),
-              y => struct(x.as("a"), y.as("b")))))).as("p"))
+        posted.select(explode(orderedPairs(kps, "a", "b")).as("p"))
           .filter(col("p.a.doc_id") < col("p.b.doc_id") &&
             col("p.a.orient") === 0)
       } else pairRows
@@ -6647,14 +6391,8 @@ object Multimodal {
       index.columns.contains("ax") && index.columns.contains("ay"),
       "verified screening needs an ANCHORED index (fp_ver + ax/ay " +
         "columns) — build it with imageAffineFrameAnchorIndex")
-    val stale = index.filter(col("fp_ver") =!= lit(AffineFrameFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"affine-frame index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $AffineFrameFpVersion — rebuild it with " +
-        "imageAffineFrameAnchorIndex before screening (cross-version " +
-        "landmarks never match)")
+    requireFpVersion(index, AffineFrameFpVersion, "affine-frame",
+      "imageAffineFrameAnchorIndex")
     val lms = Materialize.eager(
       imageAffineFrameLandmarksAnchored(media, kTop, nNear, nBasis,
         qStep, smoothR, radius, minAvg))
@@ -6906,18 +6644,8 @@ object Multimodal {
       nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
       smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
       minShared: Int = 0)(implicit s: SparkSession): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"constellation index has no fp_ver column: it predates " +
-        s"fingerprint version $ScaleFpVersion — rebuild it with " +
-        "imageScaleLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(ScaleFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"constellation index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $ScaleFpVersion — rebuild it with " +
-        "imageScaleLandmarkIndex before screening (cross-version " +
-        "landmarks never match)")
+    requireFpVersion(index, ScaleFpVersion, "constellation",
+      "imageScaleLandmarkIndex")
     val lms = Materialize.eager(
       imageScaleLandmarksAspect(media, hyps, kTop, nNear, qStepR,
         nAng, smoothR, radius, minAvg))
@@ -7120,18 +6848,8 @@ object Multimodal {
       qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
       radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
       implicit s: SparkSession): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"rot-constellation index has no fp_ver column: it predates " +
-        s"fingerprint version $RotScaleFpVersion — rebuild it with " +
-        "imageRotScaleLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(RotScaleFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"rot-constellation index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $RotScaleFpVersion — rebuild it with " +
-        "imageRotScaleLandmarkIndex before screening (cross-version " +
-        "landmarks never match)")
+    requireFpVersion(index, RotScaleFpVersion, "rot-constellation",
+      "imageRotScaleLandmarkIndex")
     val lms = Materialize.eager(
       imageRotScaleLandmarks(media, kTop, nNear, qStepR, nAng, smoothR,
         radius, minAvg).toDF())
@@ -7421,18 +7139,8 @@ object Multimodal {
       nAng: Int = 24, smoothR: Int = 4, radius: Int = 6,
       minAvg: Int = 24, minShared: Int = 0)(
       implicit s: SparkSession): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"constellation index has no fp_ver column: it predates " +
-        s"fingerprint version $ScaleFpVersion — rebuild it with " +
-        "videoScaleLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(ScaleFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"constellation index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $ScaleFpVersion — rebuild it with " +
-        "videoScaleLandmarkIndex before screening (cross-version " +
-        "landmarks never match)")
+    requireFpVersion(index, ScaleFpVersion, "constellation",
+      "videoScaleLandmarkIndex")
     val lms = Materialize.eager(
       videoScaleLandmarksAspect(media, hyps, every, kTop, nNear,
         qStepR, nAng, smoothR, radius, minAvg))
@@ -8186,7 +7894,8 @@ object Multimodal {
     val strf = riffChunk("strf", leBytes(Seq(
       40, w, h, 1 | (24 << 16), compression, rowBytes * h, 0, 0, 0, 0)))
     val strh = riffChunk("strh",
-      fourcc("vids") ++ fourcc(if (mjpeg) "MJPG" else "    ") ++
+      fourcc("vids") ++
+        fourcc(if (mjpeg) "MJPG" else "\u0000\u0000\u0000\u0000") ++
         leBytes(Seq(0, 0, 0, 1, 25, 0, nFrames, 0, 0, 0)) ++
         leBytes(Seq(0, w | (h << 16))))
     val strl = riffChunk("LIST", fourcc("strl") ++ strh ++ strf)
@@ -9391,33 +9100,17 @@ object Multimodal {
     // bucket size and the pair set is unchanged — but the hot
     // black/intro-frame bucket is never materialized inside one
     // collect_list task, which is the whole point of the cap at scale
-    val capped = if (maxDf <= 0) chunked
-      else chunked.join(
-        chunked.groupBy(col("frame_idx"), col("chunk"), col("ck"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("frame_idx"), col("chunk"), col("ck")),
-        Seq("frame_idx", "chunk", "ck"), "left_semi")
-    val buckets = capped.groupBy(col("frame_idx"), col("chunk"), col("ck"))
-      .agg(collect_list(struct(col("doc_id"), col("ph"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    val pairs = buckets.select(col("frame_idx"), explode(flatten(
-        transform(ds, (x, i) =>
-          transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-            y => struct(x.as("a"), y.as("b")))))).as("p"))
+    val keys = Seq("frame_idx", "chunk", "ck")
+    val pairs = postings(capDf(chunked, keys, maxDf), keys,
+        struct(col("doc_id"), col("ph")))
+      .select(col("frame_idx"),
+        explode(orderedPairs(col("ds"), "a", "b")).as("p"))
       .filter(bit_count(col("p.a.ph").bitwiseXOR(col("p.b.ph"))) <= maxDist)
       .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
         col("frame_idx"))
       .distinct() // a pair can share several intact chunks of one frame
-    pairs.groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("c"))
-      .join(nf.select(col("doc_id").as("doc_a"), col("nf").as("na")), Seq("doc_a"))
-      .join(nf.select(col("doc_id").as("doc_b"), col("nf").as("nb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("c").cast("double") / least(col("na"), col("nb")), 6)
-          .as("match_frac"))
-      .filter(col("match_frac") >= minMatch)
+    overlapFrac(pairs.groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("c")), nf, "nf", minMatch)
   }
 
   case class VideoFrameHash2(doc_id: Long, frame_idx: Int, ph: Long, phf: Long)
@@ -9489,34 +9182,18 @@ object Multimodal {
       posexplode(array((0 until 4).map(c =>
         shiftright(col("h"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
       .toDF("doc_id", "frame_idx", "h", "chunk", "ck")
-    val capped = if (maxDf <= 0) chunked
-      else chunked.join(
-        chunked.groupBy(col("frame_idx"), col("chunk"), col("ck"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("frame_idx"), col("chunk"), col("ck")),
-        Seq("frame_idx", "chunk", "ck"), "left_semi")
-    val buckets = capped.groupBy(col("frame_idx"), col("chunk"), col("ck"))
-      .agg(collect_list(struct(col("doc_id"), col("h"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    val pairs = buckets.select(col("frame_idx"), explode(flatten(
-        transform(ds, (x, i) =>
-          transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-            y => struct(x.as("a"), y.as("b")))))).as("p"))
+    val keys = Seq("frame_idx", "chunk", "ck")
+    val pairs = postings(capDf(chunked, keys, maxDf, distinctDocs = true), keys,
+        struct(col("doc_id"), col("h")))
+      .select(col("frame_idx"),
+        explode(orderedPairs(col("ds"), "a", "b")).as("p"))
       .filter(col("p.a.doc_id") =!= col("p.b.doc_id")) // orientation self-rows
       .filter(bit_count(col("p.a.h").bitwiseXOR(col("p.b.h"))) <= maxDist)
       .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
         col("frame_idx"))
       .distinct() // several chunks/orientations can match one frame
-    pairs.groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("c"))
-      .join(nf.select(col("doc_id").as("doc_a"), col("nf").as("na")), Seq("doc_a"))
-      .join(nf.select(col("doc_id").as("doc_b"), col("nf").as("nb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("c").cast("double") / least(col("na"), col("nb")), 6)
-          .as("match_frac"))
-      .filter(col("match_frac") >= minMatch)
+    overlapFrac(pairs.groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("c")), nf, "nf", minMatch)
   }
 
   /** [[videoNearDupPairs]] tolerant to HORIZONTAL MIRRORING — the
@@ -9547,34 +9224,18 @@ object Multimodal {
     // pre-aggregation cap (the videoNearDupPairs shape); a doc now
     // contributes up to TWO rows per (frame_idx, chunk) — halve the
     // intended doc cap accordingly when tuning maxDf
-    val capped = if (maxDf <= 0) chunked
-      else chunked.join(
-        chunked.groupBy(col("frame_idx"), col("chunk"), col("ck"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("frame_idx"), col("chunk"), col("ck")),
-        Seq("frame_idx", "chunk", "ck"), "left_semi")
-    val buckets = capped.groupBy(col("frame_idx"), col("chunk"), col("ck"))
-      .agg(collect_list(struct(col("doc_id"), col("h"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    val pairs = buckets.select(col("frame_idx"), explode(flatten(
-        transform(ds, (x, i) =>
-          transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-            y => struct(x.as("a"), y.as("b")))))).as("p"))
+    val keys = Seq("frame_idx", "chunk", "ck")
+    val pairs = postings(capDf(chunked, keys, maxDf), keys,
+        struct(col("doc_id"), col("h")))
+      .select(col("frame_idx"),
+        explode(orderedPairs(col("ds"), "a", "b")).as("p"))
       .filter(col("p.a.doc_id") =!= col("p.b.doc_id")) // orientation self-rows
       .filter(bit_count(col("p.a.h").bitwiseXOR(col("p.b.h"))) <= maxDist)
       .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
         col("frame_idx"))
       .distinct() // several chunks/orientations can match one frame
-    pairs.groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("c"))
-      .join(nf.select(col("doc_id").as("doc_a"), col("nf").as("na")), Seq("doc_a"))
-      .join(nf.select(col("doc_id").as("doc_b"), col("nf").as("nb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("c").cast("double") / least(col("na"), col("nb")), 6)
-          .as("match_frac"))
-      .filter(col("match_frac") >= minMatch)
+    overlapFrac(pairs.groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("c")), nf, "nf", minMatch)
   }
 
   case class VideoLandmark(doc_id: Long, lm_a: Long, lm_b: Long)
@@ -9726,21 +9387,13 @@ object Multimodal {
         (0 until 4).map(c =>
           shiftright(col("lm_b"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
       .toDF("doc_id", "lm_a", "lm_b", "chunk", "ck")
-    val capped = if (maxDf <= 0) chunked
-      else chunked.join(
-        chunked.groupBy(col("chunk"), col("ck")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf).select(col("chunk"), col("ck")),
-        Seq("chunk", "ck"), "left_semi")
-    val buckets = capped.groupBy(col("chunk"), col("ck"))
-      .agg(collect_list(struct(col("doc_id"), col("lm_a"), col("lm_b"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
+    val keys = Seq("chunk", "ck")
     // a doc can hold several landmarks in one bucket (unlike the
     // one-entry-per-doc siblings), so expansion filters same-doc pairs;
     // sorting by (doc_id, ...) still guarantees doc_a < doc_b
-    val pairs = buckets.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
+    val pairs = postings(capDf(chunked, keys, maxDf), keys,
+        struct(col("doc_id"), col("lm_a"), col("lm_b")))
+      .select(explode(orderedPairs(col("ds"), "a", "b")).as("p"))
       .filter(col("p.a.doc_id") =!= col("p.b.doc_id"))
       .filter(bit_count(col("p.a.lm_a").bitwiseXOR(col("p.b.lm_a"))) +
         bit_count(col("p.a.lm_b").bitwiseXOR(col("p.b.lm_b"))) <= maxDist)
@@ -9773,27 +9426,10 @@ object Multimodal {
   private def videoLandmarkPairScoresExact(lms: DataFrame,
       minMatch: Double, maxDf: Int): DataFrame = {
     val sizes = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val bucketed =
-      if (maxDf <= 0) lms
-      else lms.join(
-        lms.groupBy(col("lm_a"), col("lm_b")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf).select(col("lm_a"), col("lm_b")),
-        Seq("lm_a", "lm_b"), "left_semi")
-    val kept = bucketed.groupBy(col("lm_a"), col("lm_b"))
-      .agg(collect_list(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    val pairs = kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
-    pairs.groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(count(lit(1)).as("c"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("nl").as("na")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("nl").as("nb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("c").cast("double") / least(col("na"), col("nb")), 6)
-          .as("match_frac"))
-      .filter(col("match_frac") >= minMatch)
+    val keys = Seq("lm_a", "lm_b")
+    overlapFrac(
+      pairCounts(postings(capDf(lms, keys, maxDf), keys, col("doc_id"))),
+      sizes, "nl", minMatch)
   }
 
   /** SKIP-TOLERANT video landmarks — the FRAME-RATE-CONVERSION tier's
@@ -9934,33 +9570,17 @@ object Multimodal {
       videoLandmarksCrop(media, every, extended).toDF())
     val sizes = lms.groupBy(col("doc_id"), col("win"))
       .agg(count(lit(1)).as("nl"))
-    val bucketed =
-      if (maxDf <= 0) lms
-      else lms.join(
-        lms.groupBy(col("lm_a"), col("lm_b"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf).select(col("lm_a"), col("lm_b")),
-        Seq("lm_a", "lm_b"), "left_semi")
-    val kept = bucketed.groupBy(col("lm_a"), col("lm_b"))
-      .agg(collect_list(struct(col("doc_id"), col("win"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    val pairs = kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
+    val keys = Seq("lm_a", "lm_b")
+    val counts = postings(capDf(lms, keys, maxDf, distinctDocs = true), keys,
+        struct(col("doc_id"), col("win")))
+      .select(explode(orderedPairs(col("ds"), "a", "b")).as("p"))
       .filter(col("p.a.doc_id") =!= col("p.b.doc_id"))
       .filter(col("p.a.win") === 0 || col("p.b.win") === 0)
-    pairs.groupBy(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
+      .groupBy(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
         col("p.a.win").as("win_a"), col("p.b.win").as("win_b"))
       .agg(count(lit(1)).as("c"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("win").as("win_a"),
-        col("nl").as("na")), Seq("doc_a", "win_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("win").as("win_b"),
-        col("nl").as("nb")), Seq("doc_b", "win_b"))
-      .select(col("doc_a"), col("doc_b"), col("win_a"), col("win_b"),
-        round(col("c").cast("double") / least(col("na"), col("nb")), 6)
-          .as("match_frac"))
-      .filter(col("match_frac") >= minMatch)
+    overlapFrac(counts, sizes, "nl", minMatch, by = Seq("win"),
+      keep = Seq("win_a", "win_b"))
   }
 
   /** Version stamp for the CROP-WINDOW video landmark family
@@ -10009,18 +9629,8 @@ object Multimodal {
   def dedupAgainstVideoCropIndex(media: DataFrame, index: DataFrame,
       minMatch: Double = 0.6, every: Int = 2)(
       implicit s: SparkSession): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"video crop index has no fp_ver column: it predates fingerprint " +
-        s"version $VideoCropFpVersion — rebuild it with " +
-        "videoCropLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(VideoCropFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"video crop index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $VideoCropFpVersion — rebuild it with " +
-        "videoCropLandmarkIndex before screening (cross-version " +
-        "landmarks never match)")
+    requireFpVersion(index, VideoCropFpVersion, "video crop",
+      "videoCropLandmarkIndex")
     val lms = Materialize.eager(videoLandmarksCrop(media, every).toDF())
       .filter(col("win") === 0)
     val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
@@ -10080,18 +9690,8 @@ object Multimodal {
   def dedupAgainstVideoSkipIndex(media: DataFrame, index: DataFrame,
       minMatch: Double = 0.6, gap: Int = 2, every: Int = 1)(
       implicit s: SparkSession): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"video skip index has no fp_ver column: it predates fingerprint " +
-        s"version $VideoSkipFpVersion — rebuild it with " +
-        "videoSkipLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(VideoSkipFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"video skip index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $VideoSkipFpVersion — rebuild it with " +
-        "videoSkipLandmarkIndex before screening (cross-version " +
-        "landmarks never match)")
+    requireFpVersion(index, VideoSkipFpVersion, "video skip",
+      "videoSkipLandmarkIndex")
     val lms = Materialize.eager(
       videoLandmarksSkip(media, gap, every).toDF())
     val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
@@ -10158,13 +9758,7 @@ object Multimodal {
           shiftright(col("ph"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
       .select(col("doc_id"), col("frame_idx"), col("ph"),
         col("pos").as("chunk"), col("col").as("ckey"))
-    val probed = if (maxDf <= 0) index
-      else index.join(
-        index.groupBy(col("frame_idx"), col("chunk"), col("ckey"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("frame_idx"), col("chunk"), col("ckey")),
-        Seq("frame_idx", "chunk", "ckey"), "left_semi")
+    val probed = capDf(index, Seq("frame_idx", "chunk", "ckey"), maxDf)
     val dup = chunks.join(
         probed.select(col("frame_idx"), col("chunk"), col("ckey"),
           col("doc_id").as("src"), col("ph").as("cph"),

@@ -406,7 +406,7 @@ object Similarity {
     * tables, generated from posting lists: ONE pass keys every vector
     * with its `tables` bucket ids (posexplode), one groupBy builds the
     * (table, bucket) member lists, and each sorted list expands to its
-    * ordered pairs — the `TextDedup.pairCounts` shape. Two shuffles
+    * ordered pairs ([[PostingPairs.orderedPairs]]). Two shuffles
     * total for all tables, versus `tables` hash joins that each
     * re-hash the corpus; per-bucket work is |bucket|², which the
     * caller bounds by deriving nBits from the corpus size. */
@@ -415,18 +415,9 @@ object Similarity {
     val keyed = base.select(col("vec_id"), posexplode(
         array((0 until tables).map(t => srpBucket(col("v"), dim, nBits, seed + t)): _*))
         .as(Seq("tbl", "bucket")))
-    val kept = keyed.groupBy(col("tbl"), col("bucket"))
-      .agg(collect_list(col("vec_id")).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    // bind the SORTED list once as a lambda variable (the wordShingles
-    // trick): HOF bodies are interpreted, so a bare array_sort subtree
-    // inside the pair lambda would re-sort the posting list per element
-    val pairs = element_at(transform(array(array_sort(col("ds"))), { sds =>
-      flatten(transform(sds, (x, i) =>
-        transform(slice(sds, i + lit(2), greatest(size(sds) - i - 1, lit(0))),
-          y => struct(x.as("id_a"), y.as("id_b")))))
-    }), 1)
-    kept.select(explode(pairs).as("p"))
+    PostingPairs.postings(keyed, Seq("tbl", "bucket"), col("vec_id"))
+      .select(explode(PostingPairs.orderedPairs(col("ds"), "id_a", "id_b"))
+        .as("p"))
       .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
       // a duplicated vec_id puts equal ids adjacent in the sorted list;
       // the old strict `x.vec_id < y.vec_id` join never emitted (a,a)

@@ -70,27 +70,10 @@ object TextDedup {
     * m docs emits m(m-1)/2 pairs; df-capping makes that m ≤ maxDf while
     * barely moving Jaccard for genuinely-near-dup pairs, which share
     * plenty of rare shingles too). */
-  private def pairCounts(sh: DataFrame, maxDf: Int): DataFrame = {
-    // df-cap BEFORE collect_list: count document frequency (map-side
-    // combinable), drop hot shingles, THEN build posting lists — a
-    // stop-word-grade shingle never materializes its giant array in a
-    // single aggregation row.
-    val indexed =
-      if (maxDf <= 0) sh
-      else sh.join(
-        sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf).select(col("shingle")),
-        Seq("shingle"), "left_semi")
-    val kept = indexed.groupBy(col("shingle"))
-      .agg(collect_list(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    val pairs = kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
-    pairs.groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(count(lit(1)).as("c"))
-  }
+  private def pairCounts(sh: DataFrame, maxDf: Int): DataFrame =
+    PostingPairs.pairCounts(PostingPairs.postings(
+      PostingPairs.capDf(sh, Seq("shingle"), maxDf), Seq("shingle"),
+      col("doc_id")))
 
   /** Exact n-gram Jaccard near-dup pairs via inverted-index posting
     * lists (shuffle on shingle, never an all-pairs cross product).
@@ -948,30 +931,18 @@ object TextDedup {
         minChunk, maxChunk).toDF(),
       minShared, maxDf)
 
-  /** Shared pairing kernel for the CDC chunk families: distinct
-    * (doc, chunk-hash) sets → per-hash posting lists (distinct-doc
+  /** Shared pairing kernel for the CDC chunk and winnowing families:
+    * distinct (doc, `key` hash) sets → per-hash posting lists (distinct-doc
     * `maxDf` cap BEFORE aggregation, the family's skew guard) →
     * ordered pair expansion → shared DISTINCT chunk count >=
     * `minShared`. */
   private def chunkOverlapPairs(chunks: DataFrame, minShared: Int,
-      maxDf: Int): DataFrame = {
+      maxDf: Int, key: String = "ch"): DataFrame = {
     val cs = Materialize.eager(
-      chunks.select(col("doc_id"), col("ch")).distinct())
-    val capped = if (maxDf <= 0) cs
-      else cs.join(
-        cs.groupBy(col("ch"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf).select(col("ch")),
-        Seq("ch"), "left_semi")
-    val kept = capped.groupBy(col("ch"))
-      .agg(collect_list(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
-      .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
+      chunks.select(col("doc_id"), col(key)).distinct())
+    PostingPairs.pairCounts(PostingPairs.postings(
+        PostingPairs.capDf(cs, Seq(key), maxDf, distinctDocs = true),
+        Seq(key), col("doc_id")), "n_shared")
       .filter(col("n_shared") >= minShared)
   }
 
@@ -1096,15 +1067,7 @@ object TextDedup {
     * >= minShared, dup_src = lowest matching corpus doc. */
   private def screenAgainstFpIndex(probeFps: DataFrame, index: DataFrame,
       keyCol: String, minShared: Int, ver: Int, builder: String): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"index has no fp_ver column: it predates fingerprint version " +
-        s"$ver — rebuild it with $builder before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(ver)).limit(1).collect()
-    require(stale.isEmpty,
-      s"index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $ver — rebuild it with $builder before screening " +
-        "(cross-version fingerprints never match)")
+    PostingPairs.requireFpVersion(index, ver, "fingerprint", builder)
     val dup = probeFps.join(
         index.select(col(keyCol), col("doc_id").as("src")), Seq(keyCol))
       .groupBy(col("doc_id"), col("src")).agg(count(lit(1)).as("c"))
@@ -1125,25 +1088,7 @@ object TextDedup {
     * suppresses single common-phrase hits. */
   def winnowOverlapPairs(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 4, w: Int = 5, minShared: Int = 3, maxDf: Int = 0)(
-      implicit s: SparkSession): DataFrame = {
-    val fps = Materialize.eager(
-      winnowFingerprints(docs, idCol, textCol, k, w).toDF()
-        .select(col("doc_id"), col("fp")).distinct())
-    val capped = if (maxDf <= 0) fps
-      else fps.join(
-        fps.groupBy(col("fp"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf).select(col("fp")),
-        Seq("fp"), "left_semi")
-    val kept = capped.groupBy(col("fp"))
-      .agg(collect_list(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
-      .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-  }
+      implicit s: SparkSession): DataFrame =
+    chunkOverlapPairs(winnowFingerprints(docs, idCol, textCol, k, w).toDF(),
+      minShared, maxDf, key = "fp")
 }

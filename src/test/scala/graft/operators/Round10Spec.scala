@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -281,6 +281,19 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
       Multimodal.dedupAgainstPHashIndexDihedral(probes, index))
     assert(dih == Map(20L -> Some(0L), 21L -> Some(1L), 22L -> Some(2L),
       23L -> Some(3L), 30L -> Some(0L), 31L -> Some(1L)), s"$dih")
+    // both screens reject stale and unstamped indexes
+    for (screen <- Seq[DataFrame => DataFrame](
+        Multimodal.dedupAgainstPHashIndex(probes, _),
+        Multimodal.dedupAgainstPHashIndexDihedral(probes, _))) {
+      val stale = intercept[IllegalArgumentException] {
+        screen(index.withColumn("fp_ver", lit(1)))
+      }
+      assert(stale.getMessage.contains("rebuild it with pHashChunkIndex"))
+      val unstamped = intercept[IllegalArgumentException] {
+        screen(index.drop("fp_ver"))
+      }
+      assert(unstamped.getMessage.contains("no fp_ver column"))
+    }
   }
 
   test("spectral index screen catches fractional-resample probes; versions enforced") {

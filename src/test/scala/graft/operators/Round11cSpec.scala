@@ -108,5 +108,14 @@ class Round11cSpec extends AnyFunSuite with BeforeAndAfterAll {
         idx.withColumnRenamed("lm", "lm")).collect()
     }
     assert(e2.getMessage.contains("rebuild"))
+    // unstamped indexes rejected by both screens
+    val e3 = intercept[IllegalArgumentException] {
+      Multimodal.dedupAgainstAudioIntervalIndex(probes, idx.drop("fp_ver"))
+    }
+    assert(e3.getMessage.contains("no fp_ver column"))
+    val e4 = intercept[IllegalArgumentException] {
+      Multimodal.dedupAgainstAudioOnsetIndex(probes, idx.drop("fp_ver"))
+    }
+    assert(e4.getMessage.contains("no fp_ver column"))
   }
 }

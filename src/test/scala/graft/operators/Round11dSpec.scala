@@ -100,5 +100,9 @@ class Round11dSpec extends AnyFunSuite with BeforeAndAfterAll {
       Multimodal.dedupAgainstVideoSkipIndex(probes, foreign).collect()
     }
     assert(e.getMessage.contains("rebuild"))
+    val unstamped = intercept[IllegalArgumentException] {
+      Multimodal.dedupAgainstVideoSkipIndex(probes, idx.drop("fp_ver"))
+    }
+    assert(unstamped.getMessage.contains("no fp_ver column"))
   }
 }

@@ -143,5 +143,9 @@ class Round11eSpec extends AnyFunSuite with BeforeAndAfterAll {
       Multimodal.dedupAgainstAudioChromaIndex(probes, foreign).collect()
     }
     assert(e.getMessage.contains("rebuild"))
+    val unstamped = intercept[IllegalArgumentException] {
+      Multimodal.dedupAgainstAudioChromaIndex(probes, idx.drop("fp_ver"))
+    }
+    assert(unstamped.getMessage.contains("no fp_ver column"))
   }
 }

@@ -185,5 +185,9 @@ class Round11fSpec extends AnyFunSuite with BeforeAndAfterAll {
         every = 1).collect()
     }
     assert(e.getMessage.contains("rebuild"))
+    val unstamped = intercept[IllegalArgumentException] {
+      Multimodal.dedupAgainstVideoCropIndex(probes, idx.drop("fp_ver"), every = 1)
+    }
+    assert(unstamped.getMessage.contains("no fp_ver column"))
   }
 }

@@ -166,6 +166,10 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
       Multimodal.dedupAgainstImagePeakLossyIndex(probes, foreign).collect()
     }
     assert(e.getMessage.contains("rebuild"))
+    val unstamped = intercept[IllegalArgumentException] {
+      Multimodal.dedupAgainstImagePeakLossyIndex(probes, foreign.drop("fp_ver"))
+    }
+    assert(unstamped.getMessage.contains("no fp_ver column"))
   }
 
   test("peak index: append == rebuild; cross-family stamp rejected") {
@@ -189,5 +193,9 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
       Multimodal.dedupAgainstImagePeakIndex(probes, foreign).collect()
     }
     assert(e.getMessage.contains("rebuild"))
+    val unstamped = intercept[IllegalArgumentException] {
+      Multimodal.dedupAgainstImagePeakIndex(probes, foreign.drop("fp_ver"))
+    }
+    assert(unstamped.getMessage.contains("no fp_ver column"))
   }
 }

@@ -133,6 +133,10 @@ class Round11iSpec extends AnyFunSuite with BeforeAndAfterAll {
       Multimodal.dedupAgainstImageScaleIndex(probes, foreign).collect()
     }
     assert(e.getMessage.contains("rebuild"))
+    val unstamped = intercept[IllegalArgumentException] {
+      Multimodal.dedupAgainstImageScaleIndex(probes, foreign.drop("fp_ver"))
+    }
+    assert(unstamped.getMessage.contains("no fp_ver column"))
   }
 
   test("the tier survives the full thumbnail compound: crop + resize + JPEG") {

@@ -133,5 +133,9 @@ class Round11jSpec extends AnyFunSuite with BeforeAndAfterAll {
         .collect()
     }
     assert(e.getMessage.contains("rebuild"))
+    val unstamped = intercept[IllegalArgumentException] {
+      Multimodal.dedupAgainstImageScaleIndexDihedral(probes, index.drop("fp_ver"))
+    }
+    assert(unstamped.getMessage.contains("no fp_ver column"))
   }
 }

@@ -126,5 +126,9 @@ class Round11lSpec extends AnyFunSuite with BeforeAndAfterAll {
         .collect()
     }
     assert(e.getMessage.contains("rebuild"))
+    val unstamped = intercept[IllegalArgumentException] {
+      Multimodal.dedupAgainstImageRotScaleIndex(probes, foreign.drop("fp_ver"))
+    }
+    assert(unstamped.getMessage.contains("no fp_ver column"))
   }
 }

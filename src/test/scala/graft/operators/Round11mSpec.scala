@@ -105,6 +105,16 @@ class Round11mSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSet
     assert(fan == Set((20L, false), (21L, false), (130L, true)),
       s"unexpected aspect screen verdicts: $fan")
+    val stale = intercept[IllegalArgumentException] {
+      Multimodal.dedupAgainstImageScaleIndexAspect(probes,
+        index.withColumn("fp_ver", lit(Multimodal.PeakFpVersion)))
+    }
+    assert(stale.getMessage.contains("rebuild it with imageScaleLandmarkIndex"))
+    val unstamped = intercept[IllegalArgumentException] {
+      Multimodal.dedupAgainstImageScaleIndexAspect(probes,
+        index.drop("fp_ver"))
+    }
+    assert(unstamped.getMessage.contains("no fp_ver column"))
     val e = intercept[IllegalArgumentException] {
       Multimodal.imageScaleLandmarksAspect(probes,
         hyps = Seq(0.75, 1.0)).collect()

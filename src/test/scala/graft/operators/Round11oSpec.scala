@@ -86,5 +86,15 @@ class Round11oSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSet
     assert(fan == Set((20L, false), (130L, true)),
       s"unexpected video aspect screen verdicts: $fan")
+    val stale = intercept[IllegalArgumentException] {
+      Multimodal.dedupAgainstVideoScaleIndexAspect(probes,
+        index.withColumn("fp_ver", lit(Multimodal.PeakFpVersion)))
+    }
+    assert(stale.getMessage.contains("rebuild it with videoScaleLandmarkIndex"))
+    val unstamped = intercept[IllegalArgumentException] {
+      Multimodal.dedupAgainstVideoScaleIndexAspect(probes,
+        index.drop("fp_ver"))
+    }
+    assert(unstamped.getMessage.contains("no fp_ver column"))
   }
 }
